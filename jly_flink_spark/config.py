@@ -31,6 +31,11 @@ class ConfigError(ValueError):
     """Raised when a task config fails validation."""
 
 
+class DuplicateInstanceError(ConfigError):
+    """Two sources share an instanceName, so the instance -> fb_no
+    lookup (AdbSink.java:43-47) would be ambiguous."""
+
+
 @dataclass
 class SourceInfo:
     instance_name: str
@@ -128,10 +133,17 @@ def check_task_config(cfg: TaskConfig) -> None:
         raise ConfigError("task config: `tables` must be non-empty")
     if not cfg.sources:
         raise ConfigError("task config: `sources` must be non-empty")
+    check_unique_instances(cfg)
+
+
+def check_unique_instances(cfg: TaskConfig) -> None:
+    """Raise DuplicateInstanceError if two sources share an instanceName."""
     names = [s.instance_name for s in cfg.sources]
     dupes = {n for n in names if names.count(n) > 1}
     if dupes:
-        raise ConfigError(f"task config: duplicate instanceName(s): {sorted(dupes)}")
+        raise DuplicateInstanceError(
+            f"task config: duplicate instanceName(s): {sorted(dupes)}"
+        )
 
 
 def demo_task_config(n_sources: int = 3, db_alias: str = "demo") -> TaskConfig:

@@ -5,14 +5,16 @@ T1–T7) as a lazy DataFrame plan:
 
     envelopes -> op='d' filter (T1) -> validity guards (T2)
               -> project target row (T3) -> union of N sources (T5)
-              -> broadcast dim enrichment fb_no (T6)
+              -> literal-map enrichment fb_no (T6)
               -> routing key db_tb_name (T6/T7)
 
 The reference runs this imperatively per record at parallelism 1
 (StartJob.java:39); here it is declarative, so Catalyst pushes the
-filters into the scan, prunes columns, and picks a broadcast hash
-join for the tiny sources dim — which is exactly what the reference
-hand-codes with its in-memory lookup map (AdbSink.java:43-47,88-90).
+filters into the scan and prunes columns. T6 is the reference's
+in-memory lookup map (AdbSink.java:43-47,88-90) compiled into the plan
+as a literal `map(instance_name -> fb_no)` expression: no join, no
+broadcast job, no Python task, so every epoch and batch plan stays one
+scan-local stage.
 At 100 TB the envelope scan parallelizes freely: the plan is
 order-insensitive (bag union, idempotent keyed loads), so lifting
 parallelism 1 is semantics-preserving (SURVEY.md §4.2).
@@ -27,7 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .config import TaskConfig
+from .config import TaskConfig, check_unique_instances
 
 # CDC op codes (reference: enums/ChangeType.java:12-16).
 OP_INSERT = "i"
@@ -227,25 +229,36 @@ def union_sources(dfs: Iterable[DataFrame]) -> DataFrame:
     return reduce(DataFrame.unionByName, dfs)
 
 
-def sources_dim(spark: SparkSession, cfg: TaskConfig) -> DataFrame:
-    """The tiny instance->fb_no dimension the reference builds as an
-    in-memory hash map in each sink (AdbSink.java:43-47)."""
-    rows = [(s.instance_name, s.fb_no) for s in cfg.sources]
-    return spark.createDataFrame(rows, "instance_name string, fb_no string")
+def instance_fb_no(cfg: TaskConfig) -> F.Column:
+    """T6 lookup: `fb_no` for each row's `instance_name`, from the
+    reference's per-sink `instanceName -> SourceInfo` map
+    (AdbSink.java:43-47) as a literal map expression. An unknown or
+    NULL `instance_name` gives NULL (map access returns NULL for a
+    missing key under ANSI), as the reference's `map.get()` does.
+
+    Duplicate instance names raise `config.DuplicateInstanceError`
+    here, when the plan is built: Spark would reject the map only when
+    the plan executes (a join would have duplicated rows silently)."""
+    check_unique_instances(cfg)
+    if not cfg.sources:  # map() is map<void,void>: no string lookup
+        return F.lit(None).cast("string")
+    lookup = F.create_map(
+        *[F.lit(x) for s in cfg.sources for x in (s.instance_name, s.fb_no)]
+    )
+    return lookup[F.col("instance_name")]
 
 
-def enrich_and_route(
-    df: DataFrame, dim: DataFrame, db_alias: str
-) -> DataFrame:
-    """T6+T7: broadcast-join the sources dim to stamp fb_no and derive
-    the routing key db_tb_name = '<dbAlias>_<tableName>'
-    (AdbSink.java:88-90, SrSink.java:89-91).
-
-    Broadcast is explicit: the dim is O(10) rows while the fact side is
-    the full delete stream — at 100 TB this must never shuffle."""
-    return df.join(F.broadcast(dim), "instance_name", "left").withColumn(
-        "db_tb_name",
-        F.concat_ws("_", F.lit(db_alias), F.col("table_name")),
+def enrich_and_route(df: DataFrame, cfg: TaskConfig) -> DataFrame:
+    """T6+T7: stamp fb_no and derive the routing key
+    db_tb_name = '<dbAlias>_<tableName>' (AdbSink.java:88-90,
+    SrSink.java:89-91). A per-row expression: the fact side is never
+    shuffled and no dimension is broadcast."""
+    return df.select(
+        "*",
+        instance_fb_no(cfg).alias("fb_no"),
+        F.concat_ws("_", F.lit(cfg.db_alias), F.col("table_name")).alias(
+            "db_tb_name"
+        ),
     )
 
 
@@ -268,13 +281,13 @@ def build_pipeline(
     The reference parses/filters per source stream then unions
     (StartJob.java:52-92); with `instance_name` as a column the union
     is implicit and the plan is identical — one scan, one filter chain,
-    one broadcast join (SURVEY.md T5 note). `normalize_data_json`:
-    see `project_target`."""
+    one projection (SURVEY.md T5 note). `normalize_data_json`:
+    see `project_target`. `spark` is unused and kept for callers."""
     deletes = validity_guards(delete_filter(envelopes))
     projected = project_target(
         deletes, normalize_data_json=normalize_data_json
     )
-    enriched = enrich_and_route(projected, sources_dim(spark, cfg), cfg.db_alias)
+    enriched = enrich_and_route(projected, cfg)
     return target_rows(enriched)
 
 

@@ -146,7 +146,9 @@ def start_archival_stream(
             bad = batch_df.filter(F.col("_is_bad")).select(
                 "instance_name", "raw_value"
             )
-            if bad.limit(1).count() > 0:
+            # isEmpty is one executeTake job; limit(1).count() costs
+            # three (limit, SinglePartition exchange, count).
+            if not bad.isEmpty():
                 bad.write.mode("append").parquet(quarantine_dir)
             good = batch_df.filter(~F.col("_is_bad")).select(
                 "instance_name", "op", "ts_ms", "source_table", "before"

@@ -3,9 +3,15 @@
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
-from jly_flink_spark.config import demo_task_config
+from jly_flink_spark.config import (
+    DuplicateInstanceError,
+    SourceInfo,
+    TaskConfig,
+    demo_task_config,
+)
 from jly_flink_spark.pipeline import (
     build_pipeline,
     delete_filter,
@@ -98,11 +104,19 @@ def test_normalize_data_json_flag(spark):
 
 
 def test_unknown_instance_gets_null_fb_no(spark):
-    # Reference: map.get() returns null for unknown instance; left join parity.
+    # Reference: map.get() returns null for unknown instance; left join
+    # parity. A key missing from the lookup map and a NULL key each give
+    # fb_no NULL, not an error, under both ANSI modes.
     cfg = demo_task_config()
-    df = _env(spark, [("src-99", "d", 1754000000000, "t_x", '{"id":"7"}')])
-    out = build_pipeline(spark, df, cfg).collect()
-    assert len(out) == 1 and out[0]["fb_no"] is None
+    rows = [GOOD, ("src-99", *GOOD[1:]), (None, *GOOD[1:])]
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        for ansi in ("true", "false"):
+            spark.conf.set("spark.sql.ansi.enabled", ansi)
+            out = build_pipeline(spark, _env(spark, rows), cfg).collect()
+            assert sorted(r["fb_no"] or "" for r in out) == ["", "", "FB0"]
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
 
 
 def test_union_is_bag_semantics(spark):
@@ -120,12 +134,49 @@ def test_route_counts(spark):
     assert counts == {"demo_t_orders": 2, "demo_t_items": 1}
 
 
-def test_broadcast_join_in_plan(spark):
-    # T6 must be a broadcast join at any scale — assert the physical plan.
+# Physical operators that run Python code in a worker (pandas/Arrow
+# UDFs, batch Python UDFs, grouped/mapped pandas functions).
+PYTHON_NODES = ("EvalPython", "InPandas", "InArrow", "PythonUDF")
+
+
+def assert_scan_local_plan(plan: str) -> None:
+    """T6 must never move the fact side: the executed plan of the
+    pipeline has no join of any kind, no exchange (shuffle or
+    broadcast), and no Python-evaluated operator."""
+    for node in ("Join", "Exchange") + PYTHON_NODES:
+        assert node not in plan, f"{node} in plan:\n{plan}"
+
+
+def executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_enrichment_is_a_join_free_projection(spark):
+    # T6 is a literal-map lookup at any scale: zero exchanges, no
+    # SortMergeJoin, no join at all — the fact side never shuffles.
     cfg = demo_task_config()
     df = _env(spark, [GOOD])
-    plan = build_pipeline(spark, df, cfg)._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
+    assert_scan_local_plan(executed_plan(build_pipeline(spark, df, cfg)))
+    # The check sees Python operators: the opt-in pandas UDF trips it.
+    with pytest.raises(AssertionError, match="EvalPython"):
+        assert_scan_local_plan(executed_plan(
+            build_pipeline(spark, df, cfg, normalize_data_json=True)
+        ))
+
+
+def test_duplicate_instance_rejected_when_plan_is_built(spark):
+    # A join would duplicate every row of the shared instance; the map
+    # would fail only at execution. Building the plan must refuse.
+    cfg = TaskConfig(
+        db_alias="demo",
+        tables=["t_orders"],
+        sources=[
+            SourceInfo(instance_name="src-0", fb_no="FB0"),
+            SourceInfo(instance_name="src-0", fb_no="FBX"),
+        ],
+    )
+    with pytest.raises(DuplicateInstanceError, match="src-0"):
+        build_pipeline(spark, _env(spark, [GOOD]), cfg)
 
 
 class TestQuarantine:

@@ -22,6 +22,7 @@ from jly_flink_spark.streaming.sinks import (
     LocalDirTransport,
     SrStyleSink,
 )
+from tests.test_pipeline import assert_scan_local_plan, executed_plan
 
 CFG = demo_task_config()
 
@@ -825,6 +826,45 @@ def test_stream_quarantine_splits_poison_messages(spark, tmp_path):
     adb = spark.read.parquet(dirs["adb"])
     # the three valid deletes still archived (ids 1, 3, 7)
     assert sorted(r["id"] for r in adb.collect()) == ["1", "3", "7"]
+
+
+# Spark jobs one quarantine-on epoch may run. Measured at 5; a
+# broadcast-join T6 and a `limit(1).count()` quarantine probe made it 9.
+EPOCH_JOB_BUDGET = 5
+
+
+def test_quarantine_epoch_fixed_cost(spark, tmp_path):
+    """The per-epoch fixed cost of the archival stream, counted in
+    Spark jobs: no broadcast job for T6, one job for the quarantine
+    probe — and the epoch's target plan is scan-local (no join, no
+    exchange, no Python operator)."""
+    env_dir = tmp_path / "envelopes"
+    env_dir.mkdir()
+    lines = [_envelope_line(*ev) for ev in EVENTS] + ["src-9|{broken json"]
+    (env_dir / "batch_0000.txt").write_text("\n".join(lines) + "\n")
+    dirs = {"adb": str(tmp_path / "adb"), "sr": str(tmp_path / "sr")}
+    dual = _make_sink(dirs, spark)
+    plans = []
+
+    def sink(target, epoch_id):
+        plans.append(executed_plan(target))
+        dual(target, epoch_id)
+
+    q = start_archival_stream(
+        spark, str(env_dir), CFG, sink, str(tmp_path / "ckpt"),
+        trigger_seconds=0.5, quarantine_dir=str(tmp_path / "quarantine"),
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    tracker = spark.sparkContext.statusTracker()
+    jobs = tracker.getJobIdsForGroup(str(q.runId))
+    assert len(plans) == 1
+    assert_scan_local_plan(plans[0])
+    assert 0 < len(jobs) <= EPOCH_JOB_BUDGET, sorted(jobs)
+    archived = spark.read.parquet(dirs["adb"]).collect()
+    assert sorted(r["id"] for r in archived) == sorted(EXPECTED_IDS)
 
 
 def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
