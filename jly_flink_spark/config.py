@@ -122,10 +122,6 @@ def load_task_config(path: str | Path) -> TaskConfig:
     return cfg
 
 
-def load_sink_config(path: str | Path) -> SinkConfig:
-    return SinkConfig.from_dict(load_yaml(path))
-
-
 def check_task_config(cfg: TaskConfig) -> None:
     """Reference-parity validation (TaskConfigChecker.java:15-34):
     non-empty tables, non-empty sources, unique instanceNames."""

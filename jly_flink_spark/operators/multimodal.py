@@ -1358,21 +1358,6 @@ def documents_as_audio_media(
     ).mapInPandas(batches, ENCODED_MEDIA_SCHEMA)
 
 
-def wav_pcm_samples(payload) -> Optional[list[int]]:
-    """The 16-bit LE samples of a planted WAV's data chunk, via the
-    same RIFF walk every consumer uses (`wav_data_range`). None on
-    truncation, odd data size, or an unexpected sample count — the
-    malformed-payload -> NULL contract."""
-    rng = wav_data_range(payload)
-    if rng is None:
-        return None
-    off, size = rng
-    n = AUDIO_FRAMES * AUDIO_FRAME_LEN
-    if size != 2 * n:
-        return None
-    return list(struct.unpack(f"<{n}h", bytes(payload)[off : off + size]))
-
-
 def audio_fingerprint_int(samples: list[int]) -> int:
     """56-bit integer energy fingerprint: frame f's energy is the sum
     of its AUDIO_FRAME_LEN squared samples; bit f set iff the energy

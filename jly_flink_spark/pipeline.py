@@ -125,28 +125,31 @@ def observe_guard_drops(env: DataFrame, name: str = "guards") -> DataFrame:
     analog of the reference's per-violation log lines
     (StartJob.java:128-151). Counters surface per micro-batch in
     StreamingQueryProgress.observedMetrics[name]; the cascade puts
-    every envelope — delete or not — in exactly one bucket, so the
-    counts reconcile with TOTAL input rows per epoch (n_not_delete +
-    guard buckets + n_archived = rows seen), catching silent row loss
-    anywhere in the chain, e.g. across a Debezium snapshot→binlog
-    phase transition where most rows are op:"r" reads."""
+    every line — malformed, non-delete or delete — in exactly one
+    bucket, so the counts reconcile with TOTAL input rows per epoch
+    (n_malformed + n_not_delete + guard buckets + n_archived = rows
+    seen), catching silent row loss anywhere in the chain, e.g. across
+    a Debezium snapshot→binlog phase transition where most rows are
+    op:"r" reads. `n_malformed` counts `parse_envelope_json`'s
+    `_is_bad` rows; a frame without that flag counts 0 there."""
     c = guard_conditions(env)
 
     def cnt(cond, alias):
         return F.count(F.when(cond, 1)).alias(alias)
 
-    # Null-safe delete test: a malformed envelope parses to op=NULL
-    # (the quarantine path feeds exactly such rows through here), and
-    # `op == 'd'` is then NULL — `~NULL` is NULL too, so without the
-    # coalesce the row would land in NO bucket and the total-rows
-    # reconciliation would report phantom loss.
-    d = F.coalesce(c["is_delete"], F.lit(False))
+    ok = ~F.col("_is_bad") if "_is_bad" in env.columns else F.lit(True)
+    # Null-safe delete test: a well-formed envelope without `op` parses
+    # to op=NULL, and `op == 'd'` is then NULL — `~NULL` is NULL too, so
+    # without the coalesce the row would land in NO bucket and the
+    # total-rows reconciliation would report phantom loss.
+    d = ok & F.coalesce(c["is_delete"], F.lit(False))
     tbl, bef, idk, ts = (
         c["tbl_ok"], c["before_ok"], c["id_ok"], c["ts_ok"]
     )
     return env.observe(
         name,
-        cnt(~d, "n_not_delete"),
+        cnt(~ok, "n_malformed"),
+        cnt(ok & ~d, "n_not_delete"),
         cnt(d & ~tbl, "n_blank_table"),
         cnt(d & tbl & ~bef, "n_null_before"),
         cnt(d & tbl & bef & ~idk, "n_no_id"),

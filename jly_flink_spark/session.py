@@ -17,6 +17,11 @@ from pyspark.sql import SparkSession
 # Reference-parity timezone (AdbSink.java:63: serverTimezone=Asia/Shanghai).
 REFERENCE_TZ = "Asia/Shanghai"
 
+# The directory that holds the `jly_flink_spark` package. Python workers
+# get it on their path, so tasks that unpickle the package's functions
+# import it whatever the driver's working directory is.
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "jly_flink_spark",
@@ -46,6 +51,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # IO compression codec — a measured tradeoff, env-switchable:
         # zstd cut the repo's largest shuffle (adamic-adar wedge

@@ -20,9 +20,10 @@ Semantics:
   newline lands).
 - Each micro-batch reads the byte ranges (start, end] and emits one
   row per envelope line: (value, file, pos) — `value` is the raw
-  Debezium-shaped JSON the existing `parse_envelope_json` pipeline
-  consumes unchanged; (file, pos) is the event's binlog position
-  (file name + starting byte offset), exposed for audit/dedup.
+  Debezium-shaped JSON that goes through the one envelope parse,
+  `parse_envelope_json`, like every other source; (file, pos) is the
+  event's binlog position (file name + starting byte offset), exposed
+  for audit/dedup.
 - ROTATION: point `path` at a directory and the series of
   lexicographically-ordered files (binlog.000001, ...) is one
   logical log — offsets are (file, pos) exactly like a real binlog
@@ -294,9 +295,10 @@ def register_binlog_source(spark) -> None:
 
 def read_binlog_stream(spark, path: str, pattern: str | None = None):
     """Streaming frame of (value, pos) envelope lines tailed from the
-    binlog-style log at `path` — drop-in for `read_envelope_stream`
-    with true byte-position offsets instead of file-granularity
-    triggers."""
+    binlog-style log at `path` — the tailer analog of
+    `read_envelope_stream`, with true byte-position offsets instead of
+    file-granularity triggers and one log per instance instead of an
+    `instance_name|` prefix."""
     register_binlog_source(spark)
     reader = spark.readStream.format(BinlogDataSource.name()).option(
         "path", path

@@ -15,8 +15,12 @@ stream is materialized two ways:
    at fixed residues so the T2 guards are actually exercised.
 
 2. `envelope_json_lines` / `read_envelope_stream` — raw JSON envelope
-   strings for streaming-parity tests (FIXTURES.md §4), parsed with
-   `from_json` like a Kafka `value` column would be.
+   strings for streaming-parity tests (FIXTURES.md §4).
+
+Every raw source (file stream, native binlog tailer, quarantine
+replay) goes through the one parse, `parse_envelope_json`, which flags
+malformed lines in-row (`_is_bad`, raw line kept as `raw_value`);
+`well_formed` is the one selection of the rows the pipeline may read.
 """
 
 from __future__ import annotations
@@ -135,56 +139,46 @@ def envelope_json_lines(envelopes: DataFrame, db: str = "demo") -> DataFrame:
     )
 
 
-def parse_envelope_json(
-    raw: DataFrame, value_col: str = "value"
-) -> DataFrame:
-    """Parse raw Debezium JSON envelope strings into the flattened
-    envelope shape (T1's parse step, StartJob.java:122).
-
-    The pre-image is re-extracted as a raw JSON string via
-    `get_json_object` so it stays opaque (decimal-as-string semantics,
-    StartJob.java:59-61) — `from_json` only touches the typed fields.
-    """
-    v = F.col(value_col)
-    parsed = raw.withColumn("_env", F.from_json(v, ENVELOPE_SCHEMA))
-    return parsed.select(
-        *[c for c in raw.columns if c != value_col],
-        F.col("_env.op").alias("op"),
-        F.col("_env.ts_ms").alias("ts_ms"),
-        F.col("_env.source.table").alias("source_table"),
-        F.get_json_object(v, "$.before").alias("before"),
-    )
-
-
 def read_envelope_stream(
     spark: SparkSession, path: str, max_files_per_trigger: int = 1
 ) -> DataFrame:
-    """File-source stream of raw envelope JSON lines (one text file per
-    micro-batch by default) — the harness stand-in for a Kafka topic.
-    maxFilesPerTrigger plays the reference's count-based batch trigger
-    (T8, AdbSink.java:92-94)."""
-    return (
+    """File-source stream of `instance_name|envelope json` lines (one
+    text file per micro-batch by default), split into `instance_name`
+    and `value` — the harness stand-in for the per-source streams the
+    reference unions (StartJob.java:52-92). maxFilesPerTrigger plays
+    the reference's count-based batch trigger (T8, AdbSink.java:92-94)."""
+    lines = (
         spark.readStream.format("text")
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .load(path)
     )
+    return lines.select(
+        F.substring_index("value", "|", 1).alias("instance_name"),
+        F.expr("substring(value, instr(value, '|') + 1)").alias("value"),
+    )
 
 
-def parse_envelope_json_flagged(
+def parse_envelope_json(
     raw: DataFrame, value_col: str = "value"
 ) -> DataFrame:
-    """Parse with an in-row corrupt-record flag: ONE frame carrying
-    the envelope columns, the raw line, and `_is_bad`.
+    """Parse raw Debezium JSON envelope strings into the flattened
+    envelope shape (T1's parse step, StartJob.java:122), flagging
+    malformed lines in-row: every other column of `raw` passes
+    through, plus `raw_value` (the line itself), `_is_bad`, `op`,
+    `ts_ms`, `source_table` and `before`.
+
+    The pre-image is re-extracted as a raw JSON string via
+    `get_json_object` so it stays opaque (decimal-as-string semantics,
+    StartJob.java:59-61) — `from_json` only touches the typed fields.
 
     A malformed envelope (truncated JSON, wrong types) must never kill
-    the archival stream — the reference's parser silently nulls such
-    events out (ParseDeleteWithSource catches nothing: a bad payload
-    throws and fails the Flink task, StartJob.java:122-151; we upgrade
-    that to explicit quarantine). The raw line rides along so the
-    poison messages are replayable after a fix — the DLQ pattern,
-    minus the queue. Keeping good and bad in one frame lets the
-    streaming job parse each micro-batch ONCE for the observe()
-    counters, the quarantine write, and the pipeline.
+    the archival stream — the reference's parser has no such guard (a
+    bad payload throws and fails the Flink task, StartJob.java:122-151);
+    here it is flagged, counted (`observe_guard_drops`'s
+    `n_malformed`) and, with a quarantine dir, kept verbatim for
+    replay after a fix — the DLQ pattern, minus the queue. One frame
+    carries good and bad rows so each line is parsed once for the
+    counters, the quarantine write and the pipeline.
 
     Detection: PERMISSIVE-mode from_json with an explicit
     columnNameOfCorruptRecord field — Spark fills that field with the
@@ -192,7 +186,7 @@ def parse_envelope_json_flagged(
     every well-formed envelope (a null STRUCT is not a reliable
     signal: PERMISSIVE parsing nulls the fields, not the struct).
     """
-    quarantine_schema = T.StructType(
+    schema = T.StructType(
         list(ENVELOPE_SCHEMA.fields)
         + [T.StructField("_corrupt", T.StringType())]
     )
@@ -201,16 +195,16 @@ def parse_envelope_json_flagged(
         "_env",
         F.from_json(
             v,
-            quarantine_schema,
+            schema,
             {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt"},
         ),
     )
     # A NULL value (e.g. a Kafka/Debezium tombstone) makes from_json
     # return a null STRUCT — _corrupt is then null too, so testing
-    # _corrupt alone would misroute tombstones into `good` as all-null
-    # rows. Unparseable-or-absent both belong in quarantine.
+    # _corrupt alone would pass tombstones as all-null good rows.
+    # Unparseable-or-absent are both malformed.
     is_bad = v.isNull() | F.col("_env._corrupt").isNotNull()
-    flagged = parsed.select(
+    return parsed.select(
         *[c for c in raw.columns if c != value_col],
         v.alias("raw_value"),
         is_bad.alias("_is_bad"),
@@ -219,28 +213,11 @@ def parse_envelope_json_flagged(
         F.col("_env.source.table").alias("source_table"),
         F.get_json_object(v, "$.before").alias("before"),
     )
-    return flagged
 
 
-def parse_envelope_json_with_quarantine(
-    raw: DataFrame, value_col: str = "value"
-) -> tuple[DataFrame, DataFrame]:
-    """Parse with a corrupt-record quarantine: returns (good, bad) —
-    the two-filter view of `parse_envelope_json_flagged`; the
-    streaming job keeps the ONE flagged frame instead so a single
-    parse serves observe() counters, the quarantine write, and the
-    pipeline (no per-epoch re-parse)."""
-    flagged = parse_envelope_json_flagged(raw, value_col)
-    passthrough = [
-        c
-        for c in flagged.columns
-        if c not in ("raw_value", "_is_bad", "op", "ts_ms",
-                     "source_table", "before")
-    ]
-    bad = flagged.filter(F.col("_is_bad")).select(
-        *passthrough, "raw_value"
-    )
-    good = flagged.filter(~F.col("_is_bad")).select(
-        *passthrough, "op", "ts_ms", "source_table", "before"
-    )
-    return good, bad
+def well_formed(parsed: DataFrame) -> DataFrame:
+    """The rows of a `parse_envelope_json` frame that parsed, without
+    the flag columns — what `build_pipeline` reads. Filtering on
+    `_is_bad` (not on NULL fields) matters: a line with one wrong-typed
+    field keeps a partial parse of the others, e.g. `op = 'd'`."""
+    return parsed.filter(~F.col("_is_bad")).drop("raw_value", "_is_bad")

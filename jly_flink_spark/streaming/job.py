@@ -1,7 +1,7 @@
-"""The streaming archival job: file-source envelope stream →
-parse/filter/project/enrich (the batch pipeline, reused verbatim —
-Structured Streaming executes the same logical plan incrementally) →
-foreachBatch dual sink.
+"""The streaming archival job: file-source envelope stream → one
+flagged parse with the guard counters → per epoch (foreachBatch): the
+optional quarantine of malformed lines, then filter/project/enrich
+(the batch pipeline, reused verbatim) → dual sink.
 
 Maps the reference's runtime controls onto the micro-batch engine
 (SURVEY.md §3.3):
@@ -15,43 +15,20 @@ Maps the reference's runtime controls onto the micro-batch engine
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..config import TaskConfig
-from ..pipeline import build_pipeline
-from ..sources.envelopes import parse_envelope_json, read_envelope_stream
+from ..pipeline import build_pipeline, observe_guard_drops
+from ..sources.envelopes import (
+    parse_envelope_json,
+    read_envelope_stream,
+    well_formed,
+)
 from .sinks import DualSink
-
-
-def streaming_pipeline(
-    spark: SparkSession,
-    envelope_dir: str,
-    cfg: TaskConfig,
-    instance_col_from: str = "file",
-    max_files_per_trigger: int = 1,
-) -> DataFrame:
-    """Streaming envelope source → target rows. The envelope files
-    carry `instance_name|json` lines (the harness encoding of the
-    per-source streams the reference unions — StartJob.java:52-92)."""
-    from pyspark.sql import functions as F
-
-    raw = read_envelope_stream(
-        spark, envelope_dir, max_files_per_trigger=max_files_per_trigger
-    )
-    # value = "<instance_name>|<envelope json>"
-    parsed = parse_envelope_json(
-        raw.select(
-            F.substring_index("value", "|", 1).alias("instance_name"),
-            F.expr("substring(value, instr(value, '|') + 1)").alias("value"),
-        )
-    )
-    # T2 log-and-drop observability (StartJob.java:128-151): per-epoch
-    # guard-drop counters ride on the stream via observe() and surface
-    # in StreamingQueryProgress.observedMetrics["guards"].
-    from ..pipeline import observe_guard_drops
-
-    return build_pipeline(spark, observe_guard_drops(parsed), cfg)
 
 
 def streaming_pipeline_binlogs(
@@ -68,9 +45,6 @@ def streaming_pipeline_binlogs(
     every instance at its committed position independently."""
     from functools import reduce
 
-    from pyspark.sql import functions as F
-
-    from ..pipeline import observe_guard_drops
     from ..sources.binlog_source import read_binlog_stream
 
     if not instance_logs:
@@ -82,8 +56,8 @@ def streaming_pipeline_binlogs(
         for instance, path in sorted(instance_logs.items())
     ]
     raw = reduce(lambda a, b: a.unionByName(b), streams)
-    parsed = parse_envelope_json(raw)
-    return build_pipeline(spark, observe_guard_drops(parsed), cfg)
+    parsed = observe_guard_drops(parse_envelope_json(raw))
+    return build_pipeline(spark, well_formed(parsed), cfg)
 
 
 def start_archival_stream(
@@ -99,48 +73,35 @@ def start_archival_stream(
     """Start the delete-archival stream (the Spark analog of
     StartJob.main wiring + env.execute, StartJob.java:36-108).
 
-    With `quarantine_dir`, malformed envelopes are split out inside
-    each micro-batch and appended there as parquet (raw line kept for
-    replay-after-fix) instead of poisoning the stream — one source,
-    one checkpoint, both outputs written in the same epoch, so the
-    quarantine inherits the stream's at-least-once guarantee."""
-    from pyspark.sql import functions as F
+    Each line is parsed once, in the streaming projection; the T2
+    guard counters (malformed lines included) ride the stream via
+    observe() and surface in StreamingQueryProgress
+    .observedMetrics["guards"]. Each epoch drops the malformed rows
+    before T1-T7 and hands the target rows to `sink`.
 
-    if quarantine_dir is None:
-        target = streaming_pipeline(
-            spark, envelope_dir, cfg,
-            max_files_per_trigger=max_files_per_trigger,
+    With `quarantine_dir`, the malformed lines of epoch n are also
+    written, raw line kept for replay after a fix, to
+    `quarantine_dir/epoch_id=<n>` in overwrite mode — the contract of
+    `AdbStyleSink` — so a replayed epoch rewrites its own partition
+    instead of appending its poison lines twice."""
+    parsed = observe_guard_drops(
+        parse_envelope_json(
+            read_envelope_stream(
+                spark, envelope_dir,
+                max_files_per_trigger=max_files_per_trigger,
+            )
         )
-        return (
-            target.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(processingTime=f"{trigger_seconds} seconds")
-            .start()
-        )
-
-    from ..pipeline import observe_guard_drops
-    from ..sources.envelopes import parse_envelope_json_flagged
-
-    raw = read_envelope_stream(
-        spark, envelope_dir, max_files_per_trigger=max_files_per_trigger
-    ).select(
-        F.substring_index("value", "|", 1).alias("instance_name"),
-        F.expr("substring(value, instr(value, '|') + 1)").alias("value"),
-    )
-    # Parse ONCE in the streaming projection (flag column, no split):
-    # the T2 guard counters then ride the stream exactly as in the
-    # non-quarantine path (bad rows have NULL op, so the guard
-    # cascade skips them), plus a quarantine counter — and the
-    # foreachBatch below only filters the already-parsed frame
-    # instead of re-running from_json up to three times per epoch.
-    flagged = observe_guard_drops(
-        parse_envelope_json_flagged(raw)
-    ).observe(
-        "quarantine",
-        F.count(F.when(F.col("_is_bad"), 1)).alias("n_quarantined"),
     )
 
-    def split_and_sink(batch_df: DataFrame, epoch_id: int) -> None:
+    def archive(batch_df: DataFrame, epoch_id: int) -> None:
+        sink(build_pipeline(spark, well_formed(batch_df), cfg), epoch_id)
+
+    def archive_epoch(batch_df: DataFrame, epoch_id: int) -> None:
+        if quarantine_dir is None:
+            archive(batch_df, epoch_id)
+            return
+        # The quarantine probe, its write and the sinks all read the
+        # batch: cache it so it is computed, and counted, once.
         batch_df.persist()
         try:
             bad = batch_df.filter(F.col("_is_bad")).select(
@@ -149,16 +110,15 @@ def start_archival_stream(
             # isEmpty is one executeTake job; limit(1).count() costs
             # three (limit, SinglePartition exchange, count).
             if not bad.isEmpty():
-                bad.write.mode("append").parquet(quarantine_dir)
-            good = batch_df.filter(~F.col("_is_bad")).select(
-                "instance_name", "op", "ts_ms", "source_table", "before"
-            )
-            sink(build_pipeline(spark, good, cfg), epoch_id)
+                bad.write.mode("overwrite").parquet(
+                    os.path.join(quarantine_dir, f"epoch_id={int(epoch_id)}")
+                )
+            archive(batch_df, epoch_id)
         finally:
             batch_df.unpersist()
 
     return (
-        flagged.writeStream.foreachBatch(split_and_sink)
+        parsed.writeStream.foreachBatch(archive_epoch)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(processingTime=f"{trigger_seconds} seconds")
         .start()
@@ -211,21 +171,21 @@ def replay_quarantine(
     preserved verbatim for exactly this), so it can run any time
     without touching the live stream or its checkpoint; remove or
     archive the quarantine dir afterwards to avoid re-replaying the
-    same rows."""
-    from pyspark.sql import functions as F
+    same rows.
 
-    from ..sources.envelopes import parse_envelope_json_flagged
-
-    raw = spark.read.parquet(quarantine_dir).select(
+    The stream writes one `epoch_id=<n>` directory per epoch; older
+    quarantine dirs hold flat parquet files. Partition discovery would
+    silently skip flat files next to partition directories, so the
+    files are listed recursively and both layouts replay."""
+    raw = spark.read.option("recursiveFileLookup", "true").parquet(
+        quarantine_dir
+    ).select(
         "instance_name", F.col("raw_value").alias("value")
     )
-    flagged = parse_envelope_json_flagged(raw).persist()
+    parsed = parse_envelope_json(raw).persist()
     try:
-        still_bad = flagged.filter(F.col("_is_bad")).count()
-        good = flagged.filter(~F.col("_is_bad")).select(
-            "instance_name", "op", "ts_ms", "source_table", "before"
-        )
-        target = build_pipeline(spark, good, cfg).persist()
+        still_bad = parsed.filter(F.col("_is_bad")).count()
+        target = build_pipeline(spark, well_formed(parsed), cfg).persist()
         try:
             n_archived = target.count()
             if n_archived:
@@ -233,5 +193,5 @@ def replay_quarantine(
         finally:
             target.unpersist()
     finally:
-        flagged.unpersist()
+        parsed.unpersist()
     return n_archived, still_bad

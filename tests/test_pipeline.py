@@ -182,7 +182,8 @@ def test_duplicate_instance_rejected_when_plan_is_built(spark):
 class TestQuarantine:
     def test_corrupt_envelopes_quarantined_not_fatal(self, spark):
         from jly_flink_spark.sources.envelopes import (
-            parse_envelope_json_with_quarantine,
+            parse_envelope_json,
+            well_formed,
         )
 
         rows = [
@@ -195,9 +196,9 @@ class TestQuarantine:
         ]
         rows.append(("src-2", None))  # Kafka/Debezium tombstone
         raw = spark.createDataFrame(rows, "instance_name string, value string")
-        good, bad = parse_envelope_json_with_quarantine(raw)
-        g = good.collect()
-        b = bad.collect()
+        parsed = parse_envelope_json(raw)
+        g = well_formed(parsed).collect()
+        b = parsed.filter(F.col("_is_bad")).collect()
         assert len(g) == 2 and len(b) == 3
         assert {r["op"] for r in g} == {"d", "i"}
         # quarantine keeps the raw line for replay-after-fix
@@ -206,7 +207,8 @@ class TestQuarantine:
     def test_quarantine_empty_on_clean_input(self, spark):
         from jly_flink_spark.sources.envelopes import (
             envelope_json_lines,
-            parse_envelope_json_with_quarantine,
+            parse_envelope_json,
+            well_formed,
         )
         from jly_flink_spark.sources.envelopes import synth_envelopes_from_events
 
@@ -215,9 +217,9 @@ class TestQuarantine:
         events = load_table(spark, "/root/testdata/sf0.001", "events")
         env = synth_envelopes_from_events(events, n_instances=2)
         raw = envelope_json_lines(env).withColumnRenamed("value", "value")
-        good, bad = parse_envelope_json_with_quarantine(raw)
-        assert bad.count() == 0
-        assert good.count() == env.count()
+        parsed = parse_envelope_json(raw)
+        assert parsed.filter(F.col("_is_bad")).count() == 0
+        assert well_formed(parsed).count() == env.count()
 
 
 class TestJavaBlankParity:

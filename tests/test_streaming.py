@@ -37,8 +37,8 @@ EVENTS = [
     ("src-2", "d", 1754000005000, "t_orders", None),  # null before guard
     ("src-0", "u", 1754000006000, "t_orders", {"id": "6"}),
     ("src-1", "d", 1754000007000, "t_orders", {"id": "7", "n": "1"}),
-    # op=null (malformed envelope): must land in n_not_delete, not in
-    # NO bucket — `~(NULL == 'd')` is NULL without the coalesce
+    # op=null (well-formed JSON, no op): must land in n_not_delete, not
+    # in NO bucket — `~(NULL == 'd')` is NULL without the coalesce
     ("src-2", None, 1754000008000, "t_orders", {"id": "8"}),
 ]
 
@@ -352,13 +352,20 @@ class TestIncrementalRollup:
         assert after == before
 
 
-def test_observe_guard_drop_counters(spark, stream_dirs):
+POISON_LINE = "src-9|{broken json"
+
+
+@pytest.mark.parametrize(
+    "quarantine", [False, True], ids=["plain", "quarantine"]
+)
+def test_observe_guard_drop_counters(spark, stream_dirs, tmp_path, quarantine):
     """T2 log-and-drop observability (StartJob.java:128-151): the
     archival stream exposes per-epoch guard-drop counters via
     observe(); summed over epochs they reconcile exactly with the
-    fixture's known violations and archived rows."""
-    from jly_flink_spark.streaming.job import start_archival_stream
-
+    fixture's known violations and archived rows. A malformed line is
+    counted as malformed, with or without a quarantine dir."""
+    with open(os.path.join(stream_dirs["env"], "batch_poison.txt"), "w") as f:
+        f.write(POISON_LINE + "\n")
     sink = _make_sink(stream_dirs, spark)
     q = start_archival_stream(
         spark,
@@ -367,6 +374,7 @@ def test_observe_guard_drop_counters(spark, stream_dirs):
         sink,
         stream_dirs["ckpt"],
         trigger_seconds=0.5,
+        quarantine_dir=str(tmp_path / "quarantine") if quarantine else None,
     )
     try:
         q.processAllAvailable()
@@ -380,8 +388,10 @@ def test_observe_guard_drop_counters(spark, stream_dirs):
         q.stop()
     # EVENTS fixture: 3 non-deletes (i/u/null-op), 1 blank-table, 1
     # null-before, 1 bad-ts delete dropped; 3 deletes archived
-    # (ids 1, 3, 7); no missing-id case. Buckets sum to len(EVENTS).
+    # (ids 1, 3, 7); no missing-id case; plus the one poison line.
+    # Buckets sum to the input lines.
     assert totals == {
+        "n_malformed": 1,
         "n_not_delete": 3,
         "n_blank_table": 1,
         "n_null_before": 1,
@@ -389,7 +399,7 @@ def test_observe_guard_drop_counters(spark, stream_dirs):
         "n_bad_ts": 1,
         "n_archived": 3,
     }
-    assert sum(totals.values()) == len(EVENTS)
+    assert sum(totals.values()) == len(EVENTS) + 1
 
 
 def test_adb_partial_epoch_replay_is_clean(spark, stream_dirs):
@@ -809,7 +819,7 @@ def test_stream_quarantine_splits_poison_messages(spark, tmp_path):
     env_dir = str(tmp_path / "envelopes")
     _write_envelope_files(env_dir, EVENTS)
     with open(f"{env_dir}/batch_poison.txt", "w") as f:
-        f.write("src-9|{broken json\n")
+        f.write(POISON_LINE + "\n")
     dirs = {
         "adb": str(tmp_path / "adb"),
         "sr": str(tmp_path / "sr"),
@@ -831,16 +841,17 @@ def test_stream_quarantine_splits_poison_messages(spark, tmp_path):
 # Spark jobs one quarantine-on epoch may run. Measured at 5; a
 # broadcast-join T6 and a `limit(1).count()` quarantine probe made it 9.
 EPOCH_JOB_BUDGET = 5
+# Without a quarantine dir: no cache, no probe, no quarantine write.
+# Measured at 3.
+PLAIN_EPOCH_JOB_BUDGET = 3
 
 
-def test_quarantine_epoch_fixed_cost(spark, tmp_path):
-    """The per-epoch fixed cost of the archival stream, counted in
-    Spark jobs: no broadcast job for T6, one job for the quarantine
-    probe — and the epoch's target plan is scan-local (no join, no
-    exchange, no Python operator)."""
+def _one_epoch_jobs(spark, tmp_path, quarantine_dir):
+    """Run one epoch of EVENTS plus a poison line; return the Spark
+    jobs it ran and the plans of the target frames the sink got."""
     env_dir = tmp_path / "envelopes"
     env_dir.mkdir()
-    lines = [_envelope_line(*ev) for ev in EVENTS] + ["src-9|{broken json"]
+    lines = [_envelope_line(*ev) for ev in EVENTS] + [POISON_LINE]
     (env_dir / "batch_0000.txt").write_text("\n".join(lines) + "\n")
     dirs = {"adb": str(tmp_path / "adb"), "sr": str(tmp_path / "sr")}
     dual = _make_sink(dirs, spark)
@@ -852,7 +863,7 @@ def test_quarantine_epoch_fixed_cost(spark, tmp_path):
 
     q = start_archival_stream(
         spark, str(env_dir), CFG, sink, str(tmp_path / "ckpt"),
-        trigger_seconds=0.5, quarantine_dir=str(tmp_path / "quarantine"),
+        trigger_seconds=0.5, quarantine_dir=quarantine_dir,
     )
     try:
         q.processAllAvailable()
@@ -860,10 +871,69 @@ def test_quarantine_epoch_fixed_cost(spark, tmp_path):
         q.stop()
     tracker = spark.sparkContext.statusTracker()
     jobs = tracker.getJobIdsForGroup(str(q.runId))
+    archived = spark.read.parquet(dirs["adb"]).collect()
+    assert sorted(r["id"] for r in archived) == sorted(EXPECTED_IDS)
+    return jobs, plans
+
+
+def test_quarantine_epoch_fixed_cost(spark, tmp_path):
+    """The per-epoch fixed cost of the archival stream, counted in
+    Spark jobs: no broadcast job for T6, one job for the quarantine
+    probe — and the epoch's target plan is scan-local (no join, no
+    exchange, no Python operator)."""
+    jobs, plans = _one_epoch_jobs(
+        spark, tmp_path, str(tmp_path / "quarantine")
+    )
     assert len(plans) == 1
     assert_scan_local_plan(plans[0])
     assert 0 < len(jobs) <= EPOCH_JOB_BUDGET, sorted(jobs)
-    archived = spark.read.parquet(dirs["adb"]).collect()
+
+
+def test_plain_epoch_fixed_cost(spark, tmp_path):
+    """Without a quarantine dir the epoch pays neither the probe nor
+    the cache: only the sinks' jobs run."""
+    jobs, plans = _one_epoch_jobs(spark, tmp_path, None)
+    assert len(plans) == 1
+    assert_scan_local_plan(plans[0])
+    assert 0 < len(jobs) <= PLAIN_EPOCH_JOB_BUDGET, sorted(jobs)
+
+
+def test_quarantine_written_once_across_crash_and_replay(spark, tmp_path):
+    """A sink crash after the quarantine write replays the epoch: the
+    epoch's quarantine partition is rewritten, not appended to, so
+    the poison line is quarantined exactly once and ADB archives each
+    delete exactly once."""
+
+    def crashing_sink(target, epoch_id):
+        raise RuntimeError("injected sink crash")
+
+    env_dir = str(tmp_path / "envelopes")
+    _write_envelope_files(env_dir, EVENTS, per_file=len(EVENTS))
+    with open(os.path.join(env_dir, "batch_0000.txt"), "a") as f:
+        f.write(POISON_LINE + "\n")
+    qdir, ckpt = str(tmp_path / "quarantine"), str(tmp_path / "ckpt")
+    q = start_archival_stream(
+        spark, env_dir, CFG, crashing_sink, ckpt,
+        trigger_seconds=0.5, quarantine_dir=qdir,
+    )
+    with pytest.raises(Exception, match="injected sink crash"):
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    # the crash came after the quarantine write
+    assert spark.read.parquet(qdir).count() == 1
+
+    adb_dir = str(tmp_path / "adb")
+    run_archival_once(
+        spark, env_dir, CFG, DualSink(AdbStyleSink(adb_dir)), ckpt,
+        quarantine_dir=qdir,
+    )
+    bad = spark.read.parquet(qdir).collect()
+    assert [(r["instance_name"], r["raw_value"]) for r in bad] == [
+        ("src-9", "{broken json")
+    ]
+    archived = spark.read.parquet(os.path.join(adb_dir, "data")).collect()
     assert sorted(r["id"] for r in archived) == sorted(EXPECTED_IDS)
 
 
@@ -998,6 +1068,29 @@ def test_quarantine_replay_after_fix(spark, tmp_path):
         with open(f) as fh:
             loaded += [r["id"] for r in json.load(fh)]
     assert loaded == ["77"]
+
+
+def test_quarantine_replay_reads_flat_and_epoch_layouts(spark, tmp_path):
+    """A quarantine dir that holds flat files from the append layout
+    and `epoch_id=<n>` partitions replays every row of both."""
+    from jly_flink_spark.streaming.job import replay_quarantine
+
+    qdir = str(tmp_path / "quarantine")
+    line = (
+        '{{"op":"d","ts_ms":1754000000000,'
+        '"source":{{"db":"demo","table":"t_orders"}},"before":{{"id":"{}"}}}}'
+    )
+    schema = "instance_name string, raw_value string"
+    spark.createDataFrame([("src-0", line.format(1))], schema).write.parquet(qdir)
+    spark.createDataFrame([("src-1", line.format(3))], schema).write.parquet(
+        os.path.join(qdir, "epoch_id=0")
+    )
+    dirs = {"adb": str(tmp_path / "adb"), "sr": str(tmp_path / "sr")}
+    assert replay_quarantine(
+        spark, qdir, CFG, _make_sink(dirs, spark), epoch_id=10_000
+    ) == (2, 0)
+    adb = spark.read.parquet(os.path.join(dirs["adb"], "data"))
+    assert sorted(r["id"] for r in adb.collect()) == ["1", "3"]
 
 
 def test_two_queries_distinct_ids_no_label_collision(spark, tmp_path):
